@@ -7,7 +7,7 @@ join, text analysis, multimodal plumbing).
 Design stance (see SURVEY.md):
 - DataFrame/SQL only; Catalyst supplies the optimizer the reference lacks.
 - Embeddings are ``ARRAY<FLOAT>`` columns; scores are computed JVM-side with
-  ``zip_with``/``aggregate`` (whole-stage codegen), not Python UDFs.
+  ``zip_with``/``aggregate`` (interpreted folds), not Python UDFs.
 - Every operator is written for a 1000-executor / 100 TB deployment:
   broadcast small sides, single-shuffle aggregations, window top-k per
   group, LSH banding instead of O(n^2) pairs.

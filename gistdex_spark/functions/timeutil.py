@@ -35,8 +35,3 @@ def epoch_s(c: Column | str) -> Column:
     DuckDB ``epoch()``); tz-independent replacement for
     ``unix_timestamp`` whose NTZ overload routes through the session tz."""
     return F.timestamp_diff("SECOND", F.expr(_EPOCH_NTZ), _col(c))
-
-
-def seconds_between(earlier: Column | str, later: Column | str) -> Column:
-    """later - earlier in whole seconds, tz-independent for NTZ inputs."""
-    return F.timestamp_diff("SECOND", _col(earlier), _col(later))

@@ -23,9 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gistdex_spark.functions.vectors import cosine
-
-ROUND = 6
+from gistdex_spark.functions.vectors import cosine, l2_norm, with_cosine
 
 
 def train_centroids(
@@ -143,8 +141,6 @@ def assign_clusters(
         centroids = emb.sparkSession.createDataFrame(
             rows, schema=narrow_cents.schema
         )
-    from gistdex_spark.functions.vectors import dot, l2_norm
-
     cents_arr = centroids.select(
         F.struct(
             F.col("c_id"), F.col("c_vec"), l2_norm(F.col("c_vec")).alias("c_nrm")
@@ -155,11 +151,7 @@ def assign_clusters(
     )
 
     def _merge(acc, c):
-        s = F.when(
-            (F.col("__ne") == F.lit(0.0)) | (c["c_nrm"] == F.lit(0.0)), F.lit(0.0)
-        ).otherwise(
-            dot(F.col(embedding_col), c["c_vec"]) / (F.col("__ne") * c["c_nrm"])
-        )
+        s = cosine(embedding_col, c["c_vec"], na="__ne", nb=c["c_nrm"])
         return F.when(
             s > acc["s"],
             F.struct(s.alias("s"), c["c_id"].cast("bigint").alias("cid")),
@@ -265,16 +257,15 @@ def probe(
     is an equality join on ``cluster`` (partition pruning when the store
     is partitioned by it). Result: (id, score) ordered desc.
     """
-    qlit = F.lit([float(x) for x in query_vec])
     qcells = (
-        centroids.withColumn("qs", cosine("c_vec", qlit))
+        centroids.withColumn("qs", cosine("c_vec", query_vec))
         .orderBy(F.desc("qs"), F.asc("c_id"))
         .limit(nprobe)
         .select(F.col("c_id").alias("cluster"))
     )
     probed = assigned.join(F.broadcast(qcells), "cluster")
     return (
-        probed.withColumn("score", F.round(cosine(embedding_col, qlit), ROUND))
+        with_cosine(probed, embedding_col, query_vec)
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)

@@ -511,12 +511,8 @@ def decontaminate_embeddings(
     training vector)."""
     from gistdex_spark.functions import vectors as V
 
-    # Norms are computed ONCE per side before the pair expansion — inside
-    # the cross product they'd be re-folded |eval|x and |train|x over.
-    # Higher-order array functions don't enter whole-stage codegen, so the
-    # per-pair work must be exactly one dot fold. The division shape
-    # dot/(tn*evn) keeps float ops identical to the one-shot cosine (and
-    # the oracle).
+    # Norms are computed ONCE per side before the pair expansion, so the
+    # per-pair work is exactly one dot fold.
     ev = df.filter(F.col(label_col) == eval_label).select(
         F.col(vec_col).alias("ev"), V.l2_norm(vec_col).alias("evn")
     )
@@ -524,10 +520,7 @@ def decontaminate_embeddings(
         id_col, vec_col, V.l2_norm(vec_col).alias("tn")
     )
     sims = train.crossJoin(F.broadcast(ev)).select(
-        id_col,
-        F.when((F.col("tn") == 0) | (F.col("evn") == 0), F.lit(0.0))
-        .otherwise(V.dot(vec_col, "ev") / (F.col("tn") * F.col("evn")))
-        .alias("sim"),
+        id_col, V.cosine(vec_col, "ev", na="tn", nb="evn").alias("sim")
     )
     return (
         sims.groupBy(id_col)

@@ -29,9 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from gistdex_spark.functions.vectors import cosine
-
-ROUND = 6
+from gistdex_spark.functions.vectors import cosine, with_cosine
 
 
 def _kmeans_np(X, k: int, seed: int, max_iter: int):
@@ -352,10 +350,7 @@ def pq_search(
         .orderBy(F.desc("approx"), F.asc(id_col))
         .limit(shortlist)
     )
-    qlit = F.lit([float(x) for x in query_vec])
-    exact = emb.join(F.broadcast(short), id_col).withColumn(
-        "score", F.round(cosine(embedding_col, qlit), ROUND)
-    )
+    exact = with_cosine(emb.join(F.broadcast(short), id_col), embedding_col, query_vec)
     return (
         exact.select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
@@ -440,13 +435,10 @@ def ivfpq_search(
     exact math happens on ``shortlist`` rows. Pass a persisted ``index``
     (from :func:`ivfpq_index`, ideally written partitioned by cluster)
     to skip the in-line index build — the production path."""
-    from gistdex_spark.functions.vectors import cosine
-
     if index is None:
         index = ivfpq_index(emb, centroids, codebooks, id_col, embedding_col)
-    qlit = F.lit([float(x) for x in query_vec])
     qcells = (
-        centroids.withColumn("qs", cosine("c_vec", qlit))
+        centroids.withColumn("qs", cosine("c_vec", query_vec))
         .orderBy(F.desc("qs"), F.asc("c_id"))
         .limit(nprobe)
         .select(F.col("c_id").alias("cluster"))
@@ -458,9 +450,7 @@ def ivfpq_search(
         .orderBy(F.desc("approx"), F.asc(id_col))
         .limit(shortlist)
     )
-    exact = emb.join(F.broadcast(short), id_col).withColumn(
-        "score", F.round(cosine(embedding_col, qlit), ROUND)
-    )
+    exact = with_cosine(emb.join(F.broadcast(short), id_col), embedding_col, query_vec)
     return (
         exact.select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))

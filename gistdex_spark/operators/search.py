@@ -27,21 +27,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gistdex_spark.functions.text import match_count, query_words, tokens
-from gistdex_spark.functions.vectors import cosine, vector_literal
+from gistdex_spark.functions.vectors import cosine, l2_norm, with_cosine
 
 ROUND = 6
-
-
-def score_against(
-    df: DataFrame,
-    query_vec: list[float],
-    vec_col: str = "embedding",
-    score_col: str = "score",
-) -> DataFrame:
-    """Attach a rounded cosine score against a literal query vector."""
-    return df.withColumn(
-        score_col, F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
 
 
 def top_k(df: DataFrame, k: int, id_col: str = "vec_id", score_col: str = "score") -> DataFrame:
@@ -60,7 +48,7 @@ def knn(
     """J3: brute-force exact kNN. Filter first so the scan prunes."""
     if where is not None:
         df = df.filter(where)
-    return top_k(score_against(df, query_vec, vec_col), k, id_col)
+    return top_k(with_cosine(df, vec_col, query_vec), k, id_col)
 
 
 def knn_batch(
@@ -75,16 +63,21 @@ def knn_batch(
     """Batched kNN: broadcast the (small) query set, window top-k per query.
 
     One shuffle (partition by query_id); at scale the corpus side stays
-    partition-local until the rank shuffle, and AQE handles skew.
+    partition-local until the rank shuffle, and AQE handles skew. Each
+    side's norm is projected below the join, so only the dot fold runs
+    per (row, query) pair.
     """
+    corpus = corpus.withColumn("__cn", l2_norm(vec_col))
+    queries = queries.withColumn("__qn", l2_norm(query_vec_col))
     scored = corpus.crossJoin(F.broadcast(queries)).withColumn(
-        "score", F.round(cosine(F.col(vec_col), F.col(query_vec_col)), ROUND)
+        "score",
+        F.round(cosine(vec_col, query_vec_col, na="__cn", nb="__qn"), ROUND),
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .drop("rn", query_vec_col)
+        .drop("rn", query_vec_col, "__cn", "__qn")
     )
 
 
@@ -298,43 +291,44 @@ def mmr_select(
     (1-lam)*max_sim_to_already_selected.
 
     Distribution contract: ``candidates`` is an already-top-N retrieval
-    result (bounded by the retrieval parameter, never the corpus). The
-    pairwise similarity matrix is computed DISTRIBUTED (broadcast
-    self-join, cosine rounded to 6 dp engine-side); only the N relevance
-    rows + N*(N-1) sim rows are collected for the greedy loop — the same
-    bounded-collect contract as pagination. The objective is truncated by
-    floor-scaling (floor(x*1e6)/1e6), the one rounding form that is the
-    identical function of the same double in Python, Spark, and DuckDB
-    (see q2_cheapest_supplier) — ties broken by id ascending.
+    result (bounded by the retrieval parameter, never the corpus). Its N
+    rows (id, relevance, vector, norm) are collected ONCE, so the
+    retrieval DAG upstream runs once — the same bounded-collect contract
+    as pagination. The N*(N-1) pair similarities are then scored by Spark
+    over a frame built from those rows (cosine rounded to 6 dp
+    engine-side, norms carried from the one collect). The objective is
+    truncated by floor-scaling (floor(x*1e6)/1e6), the one rounding form
+    that is the identical function of the same double in Python, Spark,
+    and DuckDB (see q2_cheapest_supplier) — ties broken by id ascending.
     """
     import math as _m
-
-    from gistdex_spark.functions.vectors import cosine
 
     spark = candidates.sparkSession
     # a NULL embedding cannot be diversified against (cosine -> NULL sims
     # would poison the greedy max); drop such candidates up front
-    cand = candidates.select(id_col, score_col, vec_col).filter(
-        F.col(vec_col).isNotNull()
+    rows = (
+        candidates.filter(F.col(vec_col).isNotNull())
+        .select(id_col, score_col, vec_col, l2_norm(vec_col))
+        .collect()
     )
-    a = cand.select(
-        F.col(id_col).alias("__i"),
-        F.col(score_col).alias("__rel"),
-        F.col(vec_col).alias("__va"),
+    rel = {r[0]: r[1] for r in rows}
+    id_type = candidates.schema[id_col].dataType.simpleString()
+    vec_type = candidates.schema[vec_col].dataType.simpleString()
+    pairs = spark.createDataFrame(
+        [
+            (a[0], b[0], a[2], b[2], a[3], b[3])
+            for a in rows
+            for b in rows
+            if a[0] != b[0]
+        ],
+        schema=f"i {id_type}, j {id_type}, va {vec_type}, vb {vec_type}, "
+        "na DOUBLE, nb DOUBLE",
     )
-    bside = cand.select(F.col(id_col).alias("__j"), F.col(vec_col).alias("__vb"))
-    pairs = (
-        a.crossJoin(F.broadcast(bside))
-        .filter(F.col("__i") != F.col("__j"))
-        .select(
-            "__i",
-            "__j",
-            F.round(cosine(F.col("__va"), F.col("__vb")), ROUND).alias("__s"),
-        )
-    )
-    rel = {r["__i"]: r["__rel"] for r in a.select("__i", "__rel").collect()}
     sim: dict[tuple, float] = {
-        (r["__i"], r["__j"]): r["__s"] for r in pairs.collect()
+        (r[0], r[1]): r[2]
+        for r in pairs.select(
+            "i", "j", F.round(cosine("va", "vb", na="na", nb="nb"), ROUND)
+        ).collect()
     }
     selected: list[tuple] = []  # (rank, id, mmr)
     chosen: list = []
@@ -351,7 +345,6 @@ def mmr_select(
         chosen.append(best[0])
         remaining.remove(best[0])
     # carry the caller's id type through (string chunk ids work too)
-    id_type = candidates.schema[id_col].dataType.simpleString()
     return spark.createDataFrame(
         selected, schema=f"sel_rank INT, {id_col} {id_type}, mmr DOUBLE"
     )

@@ -105,7 +105,7 @@ def semdedup(
     """
     from gistdex_spark.operators.ivf import assign_clusters
 
-    from gistdex_spark.functions.vectors import dot, l2_norm
+    from gistdex_spark.functions.vectors import cosine, l2_norm
 
     assigned = assign_clusters(
         emb,
@@ -128,16 +128,7 @@ def semdedup(
         .join(F.broadcast(cents), "cluster")
         .withColumn(
             "cos_centroid",
-            F.round(
-                F.when(
-                    (F.col("nrm") == F.lit(0.0)) | (F.col("c__nrm") == F.lit(0.0)),
-                    F.lit(0.0),
-                ).otherwise(
-                    dot(F.col(embedding_col), F.col("c__vec"))
-                    / (F.col("nrm") * F.col("c__nrm"))
-                ),
-                ROUND,
-            ),
+            F.round(cosine(embedding_col, "c__vec", na="nrm", nb="c__nrm"), ROUND),
         )
         .drop("c__vec", "c__nrm")
     )
@@ -190,9 +181,7 @@ def semdedup(
         F.col("cos_centroid").alias("cc_b"),
         F.col("nrm").alias("n_b"),
     )
-    pair_cos = F.when(
-        (F.col("n_a") == F.lit(0.0)) | (F.col("n_b") == F.lit(0.0)), F.lit(0.0)
-    ).otherwise(dot("v_a", "v_b") / (F.col("n_a") * F.col("n_b")))
+    pair_cos = cosine("v_a", "v_b", na="n_a", nb="n_b")
     # Equality join on cluster; "neighbour sorts lower" keeps the pair
     # half-open so each duplicate relation is examined once per direction.
     #

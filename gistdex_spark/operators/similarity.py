@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from gistdex_spark.functions.vectors import cosine, vector_literal
+from gistdex_spark.functions.vectors import cosine, l2_norm, with_cosine
 
 ROUND = 6
 
@@ -52,9 +52,7 @@ def ann_lsh(
     """
     qb = sign_bucket_py(query_vec, nbits)
     pruned = emb.filter(sign_bucket(vec_col, nbits) == F.lit(qb))
-    scored = pruned.withColumn(
-        "score", F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
+    scored = with_cosine(pruned, vec_col, query_vec)
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -96,9 +94,7 @@ def ann_lsh_multiprobe(
     """
     probes = probe_buckets(query_vec, nbits, radius)
     pruned = emb.filter(sign_bucket(vec_col, nbits).isin(probes))
-    scored = pruned.withColumn(
-        "score", F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
+    scored = with_cosine(pruned, vec_col, query_vec)
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -144,9 +140,7 @@ def ann_lsh_multitable(
         probes = probe_buckets(query_vec, nbits, radius, offset=t * nbits)
         c = sign_bucket(vec_col, nbits, offset=t * nbits).isin(probes)
         cond = c if cond is None else (cond | c)
-    scored = emb.filter(cond).withColumn(
-        "score", F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
+    scored = with_cosine(emb.filter(cond), vec_col, query_vec)
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
 
 
@@ -246,9 +240,7 @@ def ann_lsh_vote(
         .orderBy(F.desc("__votes"), F.asc(id_col))
         .limit(shortlist)
     )
-    scored = short.withColumn(
-        "score", F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND)
-    )
+    scored = short.withColumn("score", F.round(cosine(vec_col, query_vec), ROUND))
     return (
         scored.select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
@@ -272,10 +264,13 @@ def similarity_join(
     here it is ONE broadcast join — queries are small (<=30 in ci:doc), the
     corpus side streams, and per-query top-k is a single window shuffle.
     """
+    corpus = corpus.withColumn("__cn", l2_norm(corpus_vec))
+    queries = queries.withColumn("__qn", l2_norm(query_vec))
     scored = corpus.crossJoin(F.broadcast(queries)).withColumn(
-        "sim", F.round(cosine(F.col(corpus_vec), F.col(query_vec)), ROUND)
+        "sim",
+        F.round(cosine(corpus_vec, query_vec, na="__cn", nb="__qn"), ROUND),
     )
-    out = scored.filter(F.col("sim") >= F.lit(threshold))
+    out = scored.filter(F.col("sim") >= F.lit(threshold)).drop("__cn", "__qn")
     if k_per_query is not None:
         w = Window.partitionBy(query_id).orderBy(F.desc("sim"), F.asc(corpus_id))
         out = out.withColumn("rn", F.row_number().over(w)).filter(
@@ -376,10 +371,7 @@ def ann_binary_sign(
         .limit(shortlist)
     )
     return (
-        short.withColumn(
-            "score",
-            F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND),
-        )
+        short.withColumn("score", F.round(cosine(vec_col, query_vec), ROUND))
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
@@ -566,10 +558,7 @@ def ann_int8(
         .limit(shortlist)
     )
     return (
-        short.withColumn(
-            "score",
-            F.round(cosine(F.col(vec_col), vector_literal(query_vec)), ROUND),
-        )
+        short.withColumn("score", F.round(cosine(vec_col, query_vec), ROUND))
         .select(id_col, "score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)

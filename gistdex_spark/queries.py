@@ -11,7 +11,6 @@ literals into BOTH plans, so there is no cross-engine RNG to disagree.
 from __future__ import annotations
 
 import logging
-import math
 import os
 import threading
 from collections import OrderedDict
@@ -40,25 +39,17 @@ ROUND = 6
 # --------------------------------------------------------------------------
 
 
-def _seq_norm(vec: list[float]) -> float:
-    # Sequential left-fold sum — same accumulation order as both engines.
-    s = 0.0
-    for v in vec:
-        s += v * v
-    return math.sqrt(s)
-
-
 Q_MAIN_TEXT = "vector database query"
 QV_MAIN = embed_text(Q_MAIN_TEXT)
-QN_MAIN = _seq_norm(QV_MAIN)
+QN_MAIN = V.seq_norm(QV_MAIN)
 
 Q_DOC_TEXT = "table join merge"
 QV_DOC = embed_text(Q_DOC_TEXT)
-QN_DOC = _seq_norm(QV_DOC)
+QN_DOC = V.seq_norm(QV_DOC)
 
 BATCH_TEXTS = ["table join merge", "stream window batch", "filter sort hash"]
 BATCH_VECS = [embed_text(t) for t in BATCH_TEXTS]
-BATCH_NORMS = [_seq_norm(v) for v in BATCH_VECS]
+BATCH_NORMS = [V.seq_norm(v) for v in BATCH_VECS]
 
 
 def with_score(
@@ -68,29 +59,13 @@ def with_score(
     vec_col: str = "embedding",
     score_col: str = "score",
 ) -> DataFrame:
-    """Attach rounded cosine vs a query vector carried as a broadcast
-    one-row DataFrame (keeps the expression tree small — a 64-element
-    literal array inlined into Catalyst blows up optimizer time when the
-    projection collapses, and a broadcast row is the scalable shape anyway).
+    """Attach rounded cosine vs query vector ``qv`` with norm ``qn``.
+
+    ``qv`` rides in the plan as one nested literal: a single Catalyst node,
+    so the plan stays small at any dimension. A broadcast one-row
+    DataFrame would cost one extra Spark job (the broadcast) per call.
     """
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(
-        [(qv, float(qn))], schema="q__vec ARRAY<DOUBLE>, q__norm DOUBLE"
-    )
-    ne = V.l2_norm(F.col(vec_col))
-    return (
-        df.crossJoin(F.broadcast(qdf))
-        .withColumn(
-            score_col,
-            F.round(
-                F.when(ne == F.lit(0.0), F.lit(0.0)).otherwise(
-                    V.dot(F.col(vec_col), F.col("q__vec")) / (ne * F.col("q__norm"))
-                ),
-                ROUND,
-            ),
-        )
-        .drop("q__vec", "q__norm")
-    )
+    return V.with_cosine(df, vec_col, qv, score_col, query_norm=qn)
 
 
 def sql_cos(vec_col: str, qv: list[float], qn: float) -> str:
@@ -456,24 +431,10 @@ def _batch_values_sql() -> str:
 def knn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = spark.createDataFrame(
-        [(i, BATCH_VECS[i], BATCH_NORMS[i]) for i in range(len(BATCH_VECS))],
-        schema="query_id INT, qv ARRAY<DOUBLE>, qn DOUBLE",
+        list(enumerate(BATCH_VECS)), schema="query_id INT, qv ARRAY<DOUBLE>"
     )
-    ne = V.l2_norm(F.col("embedding"))
-    scored = emb.crossJoin(F.broadcast(queries)).withColumn(
-        "score",
-        F.round(
-            F.when(ne == F.lit(0.0), F.lit(0.0)).otherwise(
-                V.dot(F.col("embedding"), F.col("qv")) / (ne * F.col("qn"))
-            ),
-            ROUND,
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "vec_id", "score")
+    return S.knn_batch(emb, queries, 5, query_vec_col="qv").select(
+        "query_id", "vec_id", "score"
     )
 
 
@@ -6947,7 +6908,7 @@ def user_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ==========================================================================
 
 _QV16 = QV_MAIN[:16]
-_QN16 = _seq_norm(_QV16)
+_QN16 = V.seq_norm(_QV16)
 
 
 @register(
@@ -7157,10 +7118,15 @@ def label_centroid_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s.c
         ).alias("cv")
     )
-    sims = emb.join(F.broadcast(carr), "label").select(
-        "label",
-        "vec_id",
-        F.round(V.cosine("embedding", "cv"), ROUND).alias("cs"),
+    carr = carr.withColumn("cn", V.l2_norm("cv"))
+    sims = (
+        emb.withColumn("en", V.l2_norm("embedding"))
+        .join(F.broadcast(carr), "label")
+        .select(
+            "label",
+            "vec_id",
+            F.round(V.cosine("embedding", "cv", na="en", nb="cn"), ROUND).alias("cs"),
+        )
     )
     return (
         sims.groupBy("label")
@@ -9759,15 +9725,19 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id").alias("anchor_id"),
             F.col("source").alias("a_source"),
             F.col("embedding").alias("a_emb"),
+            V.l2_norm("embedding").alias("a_n"),
         )
     )
     cand = (
-        corpus.crossJoin(F.broadcast(anchors))
+        corpus.withColumn("n", V.l2_norm("embedding"))
+        .crossJoin(F.broadcast(anchors))
         .filter(F.col("source") != F.col("a_source"))
         .select(
             "anchor_id",
             F.col("doc_id").alias("negative_id"),
-            F.round(V.cosine("a_emb", "embedding"), ROUND).alias("sim"),
+            F.round(
+                V.cosine("a_emb", "embedding", na="a_n", nb="n"), ROUND
+            ).alias("sim"),
         )
     )
     w = W.partitionBy("anchor_id").orderBy(F.desc("sim"), F.asc("negative_id"))

@@ -87,6 +87,25 @@ def test_search_batch_topk_per_query(engine):
     assert counts == {0: 2, 1: 2}
 
 
+def test_search_plan_has_no_broadcast(engine):
+    """The query vector rides in the plan as a literal: no createDataFrame
+    row, no broadcast exchange, no extra job per search."""
+    from gistdex_spark.plans.inspect import executed_plan
+
+    assert "BroadcastExchange" not in executed_plan(engine.search("broadcast join"))
+
+
+def test_search_batch_norms_fold_below_the_join(engine):
+    """knn_batch folds each side's l2_norm once per row, below the query
+    cross join; the projection above the join runs only the dot fold."""
+    from gistdex_spark.plans.inspect import executed_plan
+
+    lines = executed_plan(engine.search_batch(["broadcast join", "cosine"])).splitlines()
+    join = next(i for i, ln in enumerate(lines) if "BroadcastNestedLoopJoin" in ln)
+    norms = [i for i, ln in enumerate(lines) if "SQRT(" in ln]
+    assert len(norms) == 2 and min(norms) > join
+
+
 def test_original_content_roundtrip(engine):
     rebuilt = engine.original_content("doc-a").first()["content"]
     # every unique marker word survives reconstruction exactly once

@@ -11,7 +11,12 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from gistdex_spark.functions.vectors import cosine
+from gistdex_spark.functions.vectors import (
+    cosine,
+    l2_norm,
+    sql_cosine,
+    with_cosine,
+)
 from gistdex_spark.operators.dedup import (
     embedding_neardup_pairs,
     ngram_jaccard_banded,
@@ -133,6 +138,62 @@ def test_exact_pair_join_is_equality_keyed(emb):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize("elem", ["FLOAT", "DOUBLE"])
+def test_scorer_bit_identical_to_duckdb_sql_cosine(spark, elem):
+    """Both scorer forms (literal query with the row norm projected once,
+    and a pair join with each side's norm precomputed) return exactly
+    the double ``sql_cosine`` computes in DuckDB, unrounded. Edges: a
+    zero vector scores 0.0, a NULL embedding scores NULL, and FLOAT32
+    inputs widen to double the same way in both engines."""
+    import duckdb
+
+    rng = random.Random(5)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(6)]
+    rows += [(6, [0.0] * 8), (7, None)]
+    q = [rng.uniform(-1, 1) for _ in range(8)]
+    df = spark.createDataFrame(rows, schema=f"id BIGINT, v ARRAY<{elem}>")
+    con = duckdb.connect()
+    # the Spark-side values, so FLOAT32 rounding is identical in DuckDB;
+    # the query rides as a column: DuckDB folds a constant list's sum in
+    # another order, so a literal there is off by an ulp
+    con.execute(f"CREATE TABLE t (id BIGINT, v {elem}[], q DOUBLE[])")
+    con.executemany(
+        "INSERT INTO t VALUES (?, ?, ?)", [(*r, q) for r in df.collect()]
+    )
+
+    def duck(sql):
+        return dict(con.execute(f"SELECT id, {sql} FROM t").fetchall())
+
+    want = duck(sql_cosine("v", "q"))
+    assert want[6] == 0.0 and want[7] is None
+    hoisted = df.withColumn("n", l2_norm("v")).select("id", cosine("v", q, na="n"))
+    assert dict(hoisted.collect()) == want
+    rounded = with_cosine(df, "v", q).select("id", "score")
+    assert dict(rounded.collect()) == duck(f"round({sql_cosine('v', 'q')}, {ROUND})")
+    # a zero query vector scores every row 0.0, NULL embedding included
+    zero = df.select("id", cosine("v", [0.0] * 8))
+    assert dict(zero.collect()) == duck(sql_cosine("v", "list_transform(q, x -> 0.0)"))
+
+    side = df.withColumn("n", l2_norm("v"))
+    a = side.select(F.col("id").alias("i"), F.col("v").alias("va"), F.col("n").alias("na"))
+    b = side.toDF("j", "vb", "nb")
+    pairs = {
+        (r.i, r.j): r.s
+        for r in a.crossJoin(b)
+        .select("i", "j", cosine("va", "vb", na="na", nb="nb").alias("s"))
+        .collect()
+    }
+    want_pairs = {
+        (i, j): s
+        for i, j, s in con.execute(
+            f"SELECT a.id, b.id, {sql_cosine('a.v', 'b.v')} FROM t a, t b"
+        ).fetchall()
+    }
+    assert pairs == want_pairs
+    assert pairs[(6, 1)] == 0.0 and pairs[(7, 1)] is None
+    con.close()
 
 
 def test_ngram_containment_detects_subset(spark):

@@ -133,6 +133,20 @@ def test_mmr_caps_at_candidate_count(spark):
     assert sorted(r["vec_id"] for r in sel) == [1, 2]
 
 
+def test_mmr_reads_candidates_once(spark):
+    """One job collects the candidate rows (with their norms), one scores
+    the pairs frame built from them: the upstream retrieval DAG is never
+    re-run for the pair matrix, and no broadcast job is needed."""
+    cand = spark.createDataFrame(
+        [(i, 1.0 - i / 10, _unit(1.0, float(i), 2.0)) for i in range(6)],
+        schema="vec_id BIGINT, score DOUBLE, embedding ARRAY<DOUBLE>",
+    )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
+    S.mmr_select(cand, k=3, id_col="vec_id")
+    assert dag.nextJobId() - before == 2
+
+
 def test_exact_substring_spans_counts(spark):
     shared = "X" * 20 + "SHARED-TEMPLATE-Y" + "Z" * 20  # > 32 chars common
     rows = [
